@@ -10,19 +10,22 @@ reference's per-rank partial sketch + MPI_Reduce merge
                    Arrow batches into ONE numpy sketch (np.bincount per hash
                    row — no per-row Python) and emits a single serialized
                    partial-sketch row (~tens of KB).
-  stage 2 (reduce): associative element-wise merge of the partials — a
-                   tree reduction (``RDD.treeReduce``), exactly what
-                   MPI_Reduce does internally.
+  final (driver):  one ``collect()`` of the partial rows, folded on the
+                   driver in partition order (``sketches.fold``) — the
+                   single associative reduce MPI_Reduce performs. The build
+                   is ONE Python stage: each Python stage costs hundreds of
+                   milliseconds of worker start-up before it does any work,
+                   more than the fold of a few KB-to-MB blobs.
 
-At 100 TB the stage-1 output is one small row per input split, so the
-"shuffle" is a few MB regardless of input size; the build is embarrassingly
-parallel, which is what makes the >=0.8 N->4N scaling efficiency criterion
-reachable.
+The stage-1 output is one blob per input split whatever the row count,
+so what reaches the driver is partitions x blob size (1,000 x 65 KB =
+65 MB; coalesce a many-split input before the build). The build is
+embarrassingly parallel, which is what makes the >=0.8 N->4N scaling
+efficiency criterion reachable.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
@@ -31,6 +34,7 @@ import pyarrow as pa
 from ..config import CMSConfig
 from ..memtune import tune_allocator
 from ._grouped_fold import GroupedFoldBase, salted_pre_shuffle
+from .sketch_agg import merge_sketch_partials
 from ..sketches.cms import CountMinSketch
 from ..sketches.hashing import affine_hash, djb2_batch
 
@@ -165,29 +169,24 @@ def cms_text_partials(df, text_col: str, cfg: CMSConfig, *, sep: str = " ",
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)
 
 
-def merge_partials(partials_df, cfg: CMSConfig, *, depth: int | None = None) -> CountMinSketch:
-    """Tree-merge serialized partials into one sketch (MPI_Reduce analog,
-    src/mpi/mpiV2.c:163-175). treeReduce keeps every merge step bounded:
-    with P partials and fan-in f, no single node touches more than f
-    sketches — scalable to 10^5 input splits."""
-    rdd = partials_df.select("sketch").rdd.map(lambda r: bytes(r[0]))
-    n = max(rdd.getNumPartitions(), 2)
-    tree_depth = depth if depth is not None else max(2, int(math.ceil(math.log(n, 16))))
-
+def merge_partials(partials_df, cfg: CMSConfig) -> CountMinSketch:
+    """Merge serialized partials into one sketch (MPI_Reduce analog,
+    src/mpi/mpiV2.c:163-175): one ``collect()`` of the ``sketch`` column,
+    folded on the driver in partition order. Driver memory is one blob
+    per input partition: partitions x the sketch's byte size, e.g.
+    1,000 x 65 KB = 65 MB at the defaults. A product above
+    ``spark.driver.maxResultSize`` raises ``PartialsExceedDriverLimit``
+    before the partials are built; no rows at all raise ``ValueError``."""
     eps, delta = cfg.epsilon, cfg.delta
-
-    def merge_bytes(x: bytes, y: bytes) -> bytes:
-        a = CountMinSketch.from_bytes(x, eps, delta)
-        b = CountMinSketch.from_bytes(y, eps, delta)
-        return a.merge(b).to_bytes()
-
-    blob = rdd.treeReduce(merge_bytes, depth=tree_depth)
-    return CountMinSketch.from_bytes(blob, eps, delta)
+    blob_bytes = len(CountMinSketch(eps, delta, cfg.seed).to_bytes())
+    return merge_sketch_partials(
+        partials_df, lambda b: CountMinSketch.from_bytes(b, eps, delta),
+        blob_bytes=blob_bytes)
 
 
 def build_cms(df, item_col: str, cfg: CMSConfig, *, weight_col: str | None = None,
               string_items: bool = False) -> CountMinSketch:
-    """End-to-end: partial sketches per partition -> tree merge -> sketch."""
+    """End-to-end: partial sketches per partition -> driver fold -> sketch."""
     return merge_partials(
         cms_partials(df, item_col, cfg, weight_col=weight_col, string_items=string_items), cfg
     )

@@ -11,9 +11,10 @@ set has millions of entries (a 100M-key set at 1% fpp is ~120 MB of
 bits vs ~800 MB+ of raw keys in a hash-join build table).
 
 Construction rides the generic mergeable-sketch rails
-(``sketch_agg.build_sketch``: one Arrow partial per partition +
-``treeReduce`` OR-merge) — notably the build needs NO distinct/shuffle
-on the small side, because duplicate inserts are idempotent bit-ORs.
+(``sketch_agg.build_sketch``: one Arrow partial per partition, OR-merged
+on the driver, which holds partitions x filter bytes) — notably the
+build needs NO distinct/shuffle on the small side, because duplicate
+inserts are idempotent bit-ORs.
 The prefilter is an Arrow-vectorized ``mapInArrow`` predicate over the
 broadcast bits (k affine hash rows over the Mersenne prime, the same
 seeded family every sketch here uses, so a DuckDB oracle replays
@@ -55,7 +56,12 @@ def _bloom_from_bytes(b):
 def build_key_bloom(small: DataFrame, key_col: str, make_bloom: Callable[[], BloomFilter],
                     *, string_keys: bool = False) -> BloomFilter:
     """Distributed Bloom build over ``small[key_col]`` — no distinct
-    needed (bit-OR inserts are idempotent), one partial per partition."""
+    needed (bit-OR inserts are idempotent), one partial per partition.
+    Every partial is a full-size filter and all of them reach the driver:
+    partitions x filter bytes, e.g. 9 x 120 MB (100M keys at 1% fpp)
+    passes Spark's default 1 GB ``spark.driver.maxResultSize``. Such a
+    build raises ``PartialsExceedDriverLimit`` before the filters are
+    built; coalesce ``small`` to fewer partitions first."""
     return build_sketch(small, key_col, make_bloom, _bloom_from_bytes,
                         string_items=string_keys)
 

@@ -3,8 +3,9 @@
 At 100 TB an events table is append-only and time-partitioned; rebuilding a
 sketch per ad-hoc time-range query would rescan the corpus every time.
 Instead we materialize ONE small CMS per time bucket (day) — a rollup table
-of KB-sized blobs, built in a single scan on the grouped two-phase rails
-(operators/agg.cms_grouped) — and answer any [lo, hi] range query by
+of KB-sized blobs, built in a single scan on the grouped rails
+(operators/agg.cms_grouped, or one fold per whole day with
+``pre_aggregate=True``) — and answer any [lo, hi] range query by
 merging just the covered bucket sketches. CMS is linear in its input
 multiset (counters are sums), so the merge of per-day sketches is
 BIT-IDENTICAL to a sketch built directly over the date-filtered rows —
@@ -26,8 +27,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import CMSConfig
 from ..sketches.cms import CountMinSketch
-from .agg import cms_grouped, merge_partials
-from .sketch_agg import merge_sketch_partials, sketch_grouped
+from ..sketches.fold import fold_blobs
+from .agg import cms_grouped, cms_grouped_partials
+from .sketch_agg import sketch_grouped, sketch_grouped_partials
 
 ROLLUP_SCHEMA = "bucket STRING, rows_seen LONG, total LONG, sketch BINARY"
 
@@ -42,6 +44,18 @@ def _day_bucket(df: DataFrame, ts_col: str) -> DataFrame:
     return df.withColumn("__bucket", F.col(ts_col).cast("date").cast("string"))
 
 
+def _day_item_counts(bucketed: DataFrame, item_col: str) -> DataFrame:
+    """The distinct-first input of the ``pre_aggregate`` builds:
+    (day, DISTINCT item, count) rows, every row of one day in one
+    partition. Catalyst's partial/final agg does the per-occurrence
+    counting JVM-side with map-side combine; one exchange of the counted
+    rows on the day alone then lets a single Arrow task fold each whole
+    day into its final bucket sketch — one Python stage, no merge stage."""
+    return (bucketed.groupBy("__bucket", item_col)
+            .agg(F.count("*").alias("__w"))
+            .repartition("__bucket"))
+
+
 def cms_time_buckets(df, ts_col: str, item_col: str, cfg: CMSConfig, *,
                      string_items: bool = False,
                      pre_aggregate: bool = False) -> DataFrame:
@@ -51,26 +65,32 @@ def cms_time_buckets(df, ts_col: str, item_col: str, cfg: CMSConfig, *,
     CAST(ts AS DATE)). Rows with a NULL timestamp or NULL item are
     dropped, mirroring the grouped rails' NULL policy.
 
-    ``pre_aggregate`` picks the distinct-first plan. Use it iff
-    distinct (day, item) pairs ≪ rows (hot-key traffic, log-ingest
-    arrival where each input split covers few days): it trades one
-    extra (day, item) shuffle for an Arrow channel that moves O(pairs)
-    weighted rows instead of O(occurrences). Measured both ways at
-    100M rows in BENCH/rollup_scale{,_clustered}.json — 1.5x faster at
-    7.3M pairs, slower when pairs are near-unique."""
+    ``pre_aggregate`` picks the distinct-first plan: Catalyst counts
+    (day, item) pairs JVM-side, the counted rows are clustered by day,
+    and ONE Arrow task folds each whole day, through the native weighted
+    CMS update, into its final bucket row — a single Python stage with no
+    merge stage. CMS weighted updates are the same integer sums, so the
+    bucket sketches are BIT-IDENTICAL to the per-occurrence plan
+    (tested). Each day is folded once and its work is bounded by that
+    day's distinct items; a hot day is no longer split across tasks, so
+    a day whose distinct items alone swamp one task wants
+    ``pre_aggregate=False``, whose two-phase merge splits hot days.
+    Prefer the distinct-first plan when distinct (day, item) pairs ≪ rows
+    (hot-key traffic, log-ingest arrival where each input split covers
+    few days): its Arrow channel moves O(pairs) weighted rows instead of
+    O(occurrences). The 100M-row figures in
+    BENCH/rollup_scale{,_clustered}.json (1.5x faster at 7.3M pairs,
+    slower when pairs are near-unique) predate the one-fold-per-day
+    shape. That shape was timed at 4M rows on 4 cores only, against
+    splitting each day across tasks and merging: equal within run-to-run
+    noise on uniform, day-clustered, 2-day and one-hot-day (90% of rows)
+    traffic. Skewed days at scale are unmeasured."""
     bucketed = _day_bucket(df, ts_col)
     if pre_aggregate:
-        # collapse to (day, DISTINCT item, count) first: Catalyst's
-        # partial/final agg does the heavy per-occurrence counting
-        # JVM-side with map-side combine, and the Arrow channel then
-        # moves one weighted row per distinct (day, item) instead of one
-        # per occurrence. CMS weighted updates are the same integer sums,
-        # so the bucket sketches are BIT-IDENTICAL (tested) — the grouped
-        # sibling of sql_build's distinct-first plan.
-        pre = bucketed.groupBy("__bucket", item_col).agg(
-            F.count("*").alias("__w"))
-        out = cms_grouped(pre, "__bucket", item_col, cfg,
-                          string_items=string_items, weight_col="__w")
+        out = cms_grouped_partials(_day_item_counts(bucketed, item_col),
+                                   "__bucket", item_col, cfg,
+                                   string_items=string_items,
+                                   weight_col="__w")
     else:
         out = cms_grouped(bucketed, "__bucket", item_col, cfg,
                           string_items=string_items)
@@ -82,16 +102,15 @@ def cms_time_buckets(df, ts_col: str, item_col: str, cfg: CMSConfig, *,
 def cms_rollup_range(buckets_df: DataFrame, lo: str, hi: str,
                      cfg: CMSConfig) -> CountMinSketch:
     """Merge the bucket sketches with ``lo <= bucket <= hi`` (ISO date
-    strings — lexicographic order IS chronological order) into one CMS via
-    the bounded tree merge. An empty range yields the zero sketch of the
-    same config. The caller should persist ``buckets_df`` when issuing
-    several range queries against one rollup build."""
-    sel = buckets_df.filter(
-        (F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi))
-    )
-    if sel.isEmpty():
-        return cfg.new_sketch()
-    return merge_partials(sel, cfg)
+    strings — lexicographic order IS chronological order) into one CMS in
+    one action (:func:`rollup_range_collect`). An empty range yields the
+    zero sketch of the same config. The caller should persist
+    ``buckets_df`` when issuing several range queries against one rollup
+    build."""
+    eps, delta = cfg.epsilon, cfg.delta
+    _rows, sk = rollup_range_collect(
+        buckets_df, lo, hi, lambda b: CountMinSketch.from_bytes(b, eps, delta))
+    return sk if sk is not None else cfg.new_sketch()
 
 
 def sketch_time_buckets(df: DataFrame, ts_col: str, item_col: str,
@@ -102,26 +121,26 @@ def sketch_time_buckets(df: DataFrame, ts_col: str, item_col: str,
     """Kernel-generic time-bucket rollup on the grouped rails: one merged
     sketch per calendar day of ``ts_col`` for ANY kernel implementing the
     update_batch/merge/to_bytes protocol — per-day HLLs (distinct users
-    per day), Blooms, KLLs ride the same two-phase shape as the CMS
-    rollup. Returns DataFrame[bucket, rows_seen, sketch].
+    per day), Blooms, KLLs ride the same shapes as the CMS rollup.
+    Returns DataFrame[bucket, rows_seen, sketch].
 
     ``pre_aggregate=True`` collapses to (day, DISTINCT item, count)
-    JVM-side first (Catalyst partial/final agg with map-side combine) so
-    the Arrow channel moves one weighted row per distinct (day, item)
-    instead of one per occurrence — the generic sibling of
-    ``cms_time_buckets(pre_aggregate=True)``. State is identical through
-    each kernel's WEIGHTED protocol: bit-equal for 'invariant' kernels
-    (HLL/Bloom/KMV ignore counts) and 'native' ones (MG adds them);
-    'repeat' kernels (KLL/t-digest) see the same multiset but a different
-    arrival order, so bytes may differ while the published bounds hold —
-    the usual repartition caveat."""
+    JVM-side first (Catalyst partial/final agg with map-side combine),
+    clusters those rows by day and folds each whole day once, in one
+    Arrow task, into its final bucket row — the generic sibling of
+    ``cms_time_buckets(pre_aggregate=True)``: one Python stage, a day's
+    work bounded by its distinct items, a hot day no longer split across
+    tasks. State is identical through each kernel's WEIGHTED protocol:
+    bit-equal for 'invariant' kernels (HLL/Bloom/KMV ignore counts);
+    'native' (MG) and 'repeat' (KLL/t-digest) kernels see the same
+    multiset but a different arrival order, so bytes may differ while the
+    published bounds hold — the usual repartition caveat."""
     bucketed = _day_bucket(df, ts_col)
     if pre_aggregate:
-        pre = bucketed.groupBy("__bucket", item_col).agg(
-            F.count("*").alias("__w"))
-        out = sketch_grouped(pre, "__bucket", item_col, make_sketch,
-                             from_bytes, string_items=string_items,
-                             as_float=as_float, weight_col="__w")
+        out = sketch_grouped_partials(_day_item_counts(bucketed, item_col),
+                                      "__bucket", item_col, make_sketch,
+                                      string_items=string_items,
+                                      as_float=as_float, weight_col="__w")
     else:
         out = sketch_grouped(bucketed, "__bucket", item_col,
                              make_sketch, from_bytes,
@@ -132,18 +151,14 @@ def sketch_time_buckets(df: DataFrame, ts_col: str, item_col: str,
 def sketch_rollup_range(buckets_df: DataFrame, lo: str, hi: str,
                         make_sketch: Callable, from_bytes: Callable):
     """Merge the bucket sketches with ``lo <= bucket <= hi`` into one
-    sketch via the associative tree merge — the kernel-generic sibling of
-    :func:`cms_rollup_range`. Sum-merge kernels (CMS) give a sketch
-    bit-identical to a direct build over the range; idempotent merges
-    (HLL max, Bloom OR) give the EXACT same state a direct build would
-    because day buckets partition the rows (each row lands in exactly one
-    bucket). An empty range yields ``make_sketch()`` untouched."""
-    sel = buckets_df.filter(
-        (F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi))
-    )
-    if sel.isEmpty():
-        return make_sketch()
-    return merge_sketch_partials(sel, from_bytes)
+    sketch in one action (:func:`rollup_range_collect`) — the
+    kernel-generic sibling of :func:`cms_rollup_range`. Sum-merge kernels
+    (CMS) give a sketch bit-identical to a direct build over the range;
+    idempotent merges (HLL max, Bloom OR) give the EXACT same state a
+    direct build would because day buckets partition the rows (each row
+    lands in exactly one bucket). An empty range yields ``make_sketch()`` untouched."""
+    _rows, sk = rollup_range_collect(buckets_df, lo, hi, from_bytes)
+    return sk if sk is not None else make_sketch()
 
 
 def rollup_range_collect(buckets_df: DataFrame, lo: str, hi: str,
@@ -151,26 +166,21 @@ def rollup_range_collect(buckets_df: DataFrame, lo: str, hi: str,
     """ONE-job range read of a bucket table: collect the covered
     ``(bucket, sketch)`` rows (bounded by the day span — KB-sized blobs,
     the store regime's whole point) and fold them driver-side in bucket
-    order. Returns ``(rows, sketch_or_None)``.
+    order (``sketches.fold``). Returns ``(rows, sketch_or_None)``; the
+    sketch is None when no bucket lies in the range.
 
-    r6 (guide §1.2): the treeReduce path (`merge_*_partials`) costs an
-    ``isEmpty()`` probe plus an ``.rdd`` conversion plus a multi-stage
-    reduce — three-plus jobs to merge a handful of kilobyte blobs. For
-    day-span ranges the driver fold is the same ``merge()`` calls in a
-    deterministic (bucket-sorted) order: bit-identical for sum-merge
-    (CMS) and idempotent (HLL/Bloom/KMV) kernels; for order-sensitive
-    summaries (MG) the merged BYTES may differ from a tree order but
-    every published invariant (coverage, decrement bound) holds for any
-    merge order — the same caveat sketch_time_buckets already documents.
-    The sliding-window HLL query has used this exact pattern since r5."""
+    The fold order is deterministic: bit-identical to any other order for
+    sum-merge (CMS) and idempotent (HLL/Bloom/KMV) kernels; for
+    order-sensitive summaries (MG) the merged BYTES depend on the order
+    but every published invariant (coverage, decrement bound) holds for
+    any merge order — the same caveat sketch_time_buckets documents."""
     rows = buckets_df.filter(
         (F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi))
     ).select("bucket", "sketch").collect()
-    sk = None
-    for r in sorted(rows, key=lambda r: r["bucket"]):
-        o = from_bytes(bytes(r["sketch"]))
-        sk = o if sk is None else sk.merge(o)
-    return rows, sk
+    if not rows:
+        return rows, None
+    ordered = sorted(rows, key=lambda r: r["bucket"])
+    return rows, fold_blobs((r["sketch"] for r in ordered), from_bytes)
 
 
 def write_rollup(buckets_df: DataFrame, path: str, *,

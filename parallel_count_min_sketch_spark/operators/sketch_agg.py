@@ -4,21 +4,21 @@ Every kernel in ``sketches/`` implements the same protocol:
     update_batch(values) / merge(other) / to_bytes() / from_bytes(blob)
 so one partial/final implementation serves CMS, HLL, Bloom, KLL and
 t-digest alike (the north-star's "mergeable Arrow-vectorized aggregation"):
-one serialized partial per partition via ``mapInArrow``, then an
-associative tree merge. Element-wise-sum merges (CMS), max merges (HLL),
-OR merges (Bloom) and compaction merges (KLL/t-digest) all ride the same
-rails — only the kernel differs.
+one serialized partial per partition via ``mapInArrow``, then one
+associative fold of those partials on the driver. Element-wise-sum merges
+(CMS), max merges (HLL), OR merges (Bloom) and compaction merges
+(KLL/t-digest) all ride the same rails — only the kernel differs.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
 
 from ..memtune import tune_allocator
+from ..sketches.fold import fold_blobs
 from ..sketches.hashing import djb2_batch
 from ._grouped_fold import GroupedFoldBase, salted_pre_shuffle
 
@@ -167,24 +167,61 @@ def sketch_partials(df, col: str, make_sketch: Callable, *,
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)
 
 
-def merge_sketch_partials(partials_df, from_bytes: Callable, *, depth: int | None = None):
-    """Associative tree merge of serialized partials (MPI_Reduce analog)."""
-    rdd = partials_df.select("sketch").rdd.map(lambda r: bytes(r[0]))
-    n = max(rdd.getNumPartitions(), 2)
-    tree_depth = depth if depth is not None else max(2, int(math.ceil(math.log(n, 16))))
+class PartialsExceedDriverLimit(RuntimeError):
+    """One blob per input partition would not fit in
+    ``spark.driver.maxResultSize``, so the driver-side merge cannot run."""
 
-    def merge_bytes(x: bytes, y: bytes) -> bytes:
-        return from_bytes(x).merge(from_bytes(y)).to_bytes()
 
-    return from_bytes(rdd.treeReduce(merge_bytes, depth=tree_depth))
+def _check_driver_fold(partials_df, blob_bytes: int) -> None:
+    """Raise :class:`PartialsExceedDriverLimit` before the partials are
+    built when ``partitions x blob_bytes`` passes
+    ``spark.driver.maxResultSize`` (0 means no limit). Spark would
+    otherwise abort the collect only after the partial stage ran. Reading
+    the partition count plans the query; under AQE that runs a shuffle
+    below the partials, which the collect then reuses."""
+    jconf = partials_df.sparkSession.sparkContext._jsc.sc().getConf()
+    limit = jconf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if not limit:
+        return
+    n = partials_df.rdd.getNumPartitions()
+    if n * blob_bytes > limit:
+        raise PartialsExceedDriverLimit(
+            f"{n} partials x {blob_bytes:,} bytes = {n * blob_bytes:,} bytes "
+            f"passes spark.driver.maxResultSize ({limit:,} bytes); coalesce "
+            f"the input to at most {max(1, limit // blob_bytes)} partitions "
+            f"or raise spark.driver.maxResultSize")
+
+
+def merge_sketch_partials(partials_df, from_bytes: Callable, *,
+                          blob_bytes: int | None = None):
+    """Merge serialized partials into one sketch (MPI_Reduce analog): one
+    ``collect()`` of the ``sketch`` column, folded on the driver in
+    partition order, so the build runs a single Python stage. What reaches
+    the driver is partitions x blob size: 1,000 partitions x 65 KB CMS
+    blobs = 65 MB, but 9 partitions x a 120 MB Bloom filter (100M keys at
+    1% fpp) already pass Spark's default 1 GB ``spark.driver.maxResultSize``.
+    Given ``blob_bytes`` (one partial's size), that product is checked
+    first (:func:`_check_driver_fold`). Sum (CMS) and max/OR (HLL, Bloom,
+    KMV) merges give the same state in any order; Misra-Gries, KLL and
+    t-digest state depends on the order, their bounds do not. Raises
+    ``ValueError`` when ``partials_df`` has no rows."""
+    sketches = partials_df.select("sketch")
+    if blob_bytes is not None:
+        _check_driver_fold(sketches, blob_bytes)
+    return fold_blobs((r[0] for r in sketches.collect()), from_bytes)
 
 
 def build_sketch(df, col: str, make_sketch: Callable, from_bytes: Callable, *,
                  weight_col: str | None = None,
                  string_items: bool = False, as_float: bool = False):
+    """Distributed build: one partial per partition, folded on the driver.
+    The empty sketch's size bounds what reaches the driver — exactly for
+    fixed-size kernels (CMS, HLL, Bloom), from below for growing ones
+    (KLL, t-digest, Misra-Gries)."""
     partials = sketch_partials(df, col, make_sketch, weight_col=weight_col,
                                string_items=string_items, as_float=as_float)
-    return merge_sketch_partials(partials, from_bytes)
+    return merge_sketch_partials(partials, from_bytes,
+                                 blob_bytes=len(make_sketch().to_bytes()))
 
 
 def text_token_partials(df, text_col: str, make_sketch: Callable, *,
@@ -397,10 +434,7 @@ def merge_grouped_partials(partials, from_bytes: Callable):
     def merge_group(pdf):
         import pandas as pd
 
-        out = None
-        for blob in pdf["sketch"]:
-            sk = from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
+        out = fold_blobs(pdf["sketch"], from_bytes)
         return pd.DataFrame(
             {
                 "group": [pdf["group"].iloc[0]],

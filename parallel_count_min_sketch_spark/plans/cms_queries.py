@@ -684,9 +684,8 @@ def q_cms_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = cms_time_buckets(
         ev, "ts", "user_id", ROLLUP_CFG, pre_aggregate=True
     )
-    # r6: ONE job — collect the <= span-many KB day blobs and fold
-    # driver-side (rollup_range_collect; replaces persist + count +
-    # isEmpty + treeReduce, bit-identical CMS sums)
+    # ONE job — collect the <= span-many KB day blobs and fold them
+    # driver-side (rollup_range_collect; bit-identical CMS sums)
     rows, sk = rollup_range_collect(
         buckets, ROLLUP_LO, ROLLUP_HI,
         lambda b: CountMinSketch.from_bytes(
@@ -848,8 +847,7 @@ def q_rollup_day_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("ts", "user_id")
     # r6: only the two compared days feed the build (day sketches are
     # independent — identical in-range sketches, 2/30 of the day work),
-    # and BOTH day blobs come back in ONE collect folded driver-side
-    # (rollup_range_collect; replaces persist + 2x(isEmpty+treeReduce))
+    # and BOTH day blobs come back in ONE collect, folded driver-side
     ev = ev.filter(
         (F.to_date("ts") == F.lit(OVERLAP_DAY_A).cast("date"))
         | (F.to_date("ts") == F.lit(OVERLAP_DAY_B).cast("date")))
@@ -862,7 +860,8 @@ def q_rollup_day_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     blob_rel = (
         buckets.filter((F.col("bucket") >= F.lit(lo))
                        & (F.col("bucket") <= F.lit(hi)))
-        .select("bucket", "sketch", F.lit(None).cast("long").alias("x")))
+        .select(F.lit("day").alias("kind"), "bucket", "sketch",
+                F.lit(None).cast("long").alias("x")))
 
     def per_user(day: str):
         return (ev.filter(F.col("ts").isNotNull()
@@ -872,18 +871,20 @@ def q_rollup_day_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r6 follow-up: the two day blobs AND the exact inner-product scalar
     # come back in ONE union action (both relations are bounded: two KB
-    # blob rows + one scalar row), instead of two sequential collects
+    # blob rows + one scalar row), instead of two sequential collects;
+    # the ``kind`` tag tells the blob rows from the scalar row
     exact_rel = (
         per_user(OVERLAP_DAY_A).withColumnRenamed("n", "na")
         .join(per_user(OVERLAP_DAY_B).withColumnRenamed("n", "nb"), "user_id")
         .agg(F.coalesce(F.sum(F.col("na") * F.col("nb")), F.lit(0))
              .alias("x"))
-        .select(F.lit(None).cast("string").alias("bucket"),
+        .select(F.lit("exact").alias("kind"),
+                F.lit(None).cast("string").alias("bucket"),
                 F.lit(None).cast("binary").alias("sketch"), "x"))
     day_blobs: dict = {}
     exact = 0
     for r in blob_rel.unionByName(exact_rel).collect():
-        if r["sketch"] is not None:
+        if r["kind"] == "day":
             day_blobs[r["bucket"]] = bytes(r["sketch"])
         else:
             exact = int(r["x"])

@@ -193,25 +193,21 @@ def q_hll_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     from .cms_queries import ROLLUP_HI, ROLLUP_LO
-    from ..operators.rollup import sketch_rollup_range, sketch_time_buckets
+    from ..operators.rollup import rollup_range_collect, sketch_time_buckets
 
     ev = load(spark, sf_dir, "events")
     # distinct-first (pre_aggregate): Catalyst collapses per-day repeats
     # JVM-side; bit-identical for HLL's 'invariant' weighted protocol
     # (test_generic_rollup_pre_aggregate_bit_identical_for_hll)
     buckets = sketch_time_buckets(ev, "ts", "user_id", _mk_hll,
-                                  _hll_from_bytes,
-                                  pre_aggregate=True).persist()
-    try:
-        n_buckets = int(
-            buckets.filter(
-                (F.col("bucket") >= ROLLUP_LO) & (F.col("bucket") <= ROLLUP_HI)
-            ).count()
-        )
-        sk = sketch_rollup_range(buckets, ROLLUP_LO, ROLLUP_HI, _mk_hll,
-                                 _hll_from_bytes)
-    finally:
-        buckets.unpersist()
+                                  _hll_from_bytes, pre_aggregate=True)
+    # ONE job: the covered day blobs come back once, counted and folded
+    # driver-side
+    rows, sk = rollup_range_collect(buckets, ROLLUP_LO, ROLLUP_HI,
+                                    _hll_from_bytes)
+    n_buckets = len(rows)
+    if sk is None:
+        sk = _mk_hll()
     exact = (
         ev.filter(
             (F.col("ts").cast("date").cast("string") >= ROLLUP_LO)
@@ -308,13 +304,14 @@ def q_hll_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the checkpointed pairs, so their stages run inside one job —
     # both relations are bounded: ≤ span-many KB blob rows + one row per
     # window). The 8 window merges are then driver-side register-max
-    # folds, microseconds each, instead of 8 filter+treeReduce Spark jobs
+    # folds, microseconds each, instead of 8 filter+merge Spark jobs
     # (measured 10.2 s -> the buckets build alone). Same .merge() calls,
-    # so the state is identical.
+    # so the state is identical. The ``kind`` tag tells the two row
+    # shapes apart.
     bsel = buckets.filter(
         (F.col("bucket") >= ROLLUP_LO) & (F.col("bucket") <= ROLLUP_HI)
-    ).select(F.col("bucket").alias("k"), "sketch",
-             F.lit(None).cast("long").alias("n"))
+    ).select(F.lit("day").alias("kind"), F.col("bucket").alias("k"),
+             "sketch", F.lit(None).cast("long").alias("n"))
     esel = (
         pairs.join(
             F.broadcast(spine),
@@ -322,13 +319,13 @@ def q_hll_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("d") >= F.date_sub(F.col("win_day").cast("date"),
                                         SLIDE_WINDOW_DAYS - 1).cast("string")))
         .groupBy("win_day").agg(F.countDistinct("user_id").alias("n"))
-        .select(F.col("win_day").alias("k"),
+        .select(F.lit("window").alias("kind"), F.col("win_day").alias("k"),
                 F.lit(None).cast("binary").alias("sketch"), "n")
     )
     day_sk: dict = {}
     exact: dict = {}
     for r in bsel.unionByName(esel).collect():
-        if r["sketch"] is not None:
+        if r["kind"] == "day":
             sk = _hll_from_bytes(bytes(r["sketch"]))
             prev = day_sk.get(r["k"])
             day_sk[r["k"]] = prev.merge(sk) if prev is not None else sk
@@ -813,16 +810,10 @@ def q_kll_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.rollup import sketch_rollup_range, sketch_time_buckets
 
     ev = load(spark, sf_dir, "events")
-    # persist: sketch_rollup_range's isEmpty() probe + merge are two jobs —
-    # without it the whole per-day build runs twice (same pattern as the
-    # CMS/HLL pillars)
     buckets = sketch_time_buckets(ev, "ts", "value", _mk_kll, _kll_from_bytes,
-                                  as_float=True).persist()
-    try:
-        sk = sketch_rollup_range(buckets, ROLLUP_LO, ROLLUP_HI, _mk_kll,
-                                 _kll_from_bytes)
-    finally:
-        buckets.unpersist()
+                                  as_float=True)
+    sk = sketch_rollup_range(buckets, ROLLUP_LO, ROLLUP_HI, _mk_kll,
+                             _kll_from_bytes)
     sel = ev.filter(
         (F.col("ts").cast("date").cast("string") >= ROLLUP_LO)
         & (F.col("ts").cast("date").cast("string") <= ROLLUP_HI)

@@ -15,6 +15,7 @@ import struct
 
 import numpy as np
 
+from .fold import fold_blobs
 from .hashing import affine_hash, affine_params, djb2_batch
 
 _MAGIC = b"BLM1"
@@ -105,10 +106,4 @@ class BloomFilter:
 
     @staticmethod
     def merge_blobs(blobs) -> "BloomFilter":
-        out = None
-        for blob in blobs:
-            sk = BloomFilter.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
+        return fold_blobs(blobs, BloomFilter.from_bytes)

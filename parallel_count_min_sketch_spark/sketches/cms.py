@@ -17,7 +17,7 @@ equivalent of the reference broadcasting rank 0's params (src/mpi/mpiV1.c:24-26)
 Merge is element-wise matrix addition — associative and commutative — the
 same operation the reference performs with MPI_Reduce(MPI_SUM)
 (src/mpi/mpiV2.c:163-175). That associativity is what lets Spark compute
-per-partition partials in any order and tree-merge them.
+per-partition partials in any order and fold them in any order.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ import struct
 
 import numpy as np
 
+from .fold import fold_blobs
 from .hashing import LONG_PRIME, MERSENNE_PRIME, affine_hash, affine_params, djb2_batch
 
 _MAGIC = b"CMS1"
@@ -245,13 +246,7 @@ class CountMinSketch:
     @staticmethod
     def merge_blobs(blobs, epsilon: float = 0.001, delta: float = 0.1) -> "CountMinSketch":
         """Merge an iterable of serialized sketches (order-independent)."""
-        out = None
-        for blob in blobs:
-            sk = CountMinSketch.from_bytes(bytes(blob), epsilon, delta)
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
+        return fold_blobs(blobs, lambda b: CountMinSketch.from_bytes(b, epsilon, delta))
 
 
 __all__ = ["CountMinSketch", "dims", "LONG_PRIME", "MERSENNE_PRIME"]

@@ -31,6 +31,7 @@ import struct
 
 import numpy as np
 
+from .fold import fold_blobs
 from .hashing import MERSENNE_PRIME, affine_params, djb2_batch
 
 _MAGIC = b"CSK1"
@@ -151,10 +152,4 @@ class CountSketch:
 
     @staticmethod
     def merge_blobs(blobs) -> "CountSketch":
-        out = None
-        for blob in blobs:
-            sk = CountSketch.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
+        return fold_blobs(blobs, CountSketch.from_bytes)

@@ -24,6 +24,7 @@ import struct
 import numpy as np
 
 from .cms import CountMinSketch
+from .fold import fold_blobs
 
 _MAGIC = b"DYA1"
 _LEVEL_SEED_STRIDE = 7919
@@ -142,10 +143,4 @@ class DyadicCMS:
 
     @staticmethod
     def merge_blobs(blobs, epsilon: float = 0.001, delta: float = 0.1) -> "DyadicCMS":
-        out = None
-        for blob in blobs:
-            sk = DyadicCMS.from_bytes(bytes(blob), epsilon, delta)
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
+        return fold_blobs(blobs, lambda b: DyadicCMS.from_bytes(b, epsilon, delta))

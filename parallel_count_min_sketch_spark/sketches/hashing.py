@@ -33,13 +33,23 @@ import numpy as np
 MERSENNE_PRIME = 2_147_483_647  # 2^31 - 1, reference PRIME
 LONG_PRIME = 4_294_967_311  # reference LONG_PRIME (smallest prime > 2^32)
 DJB2_INIT = 5381
+# Longest token whose djb2 segment sum stays exact in int64:
+# (LONG_PRIME - 1) * L + DJB2_INIT * LONG_PRIME < 2^63, i.e. 2^31 - 5,389.
+_MAX_EXACT_LEN = (2**63 - 1 - DJB2_INIT * LONG_PRIME) // (LONG_PRIME - 1)
 
-# Maximum token byte-length supported by the vectorized djb2 kernel.
-_MAX_TOKEN_LEN = 4096
-_POW33 = np.empty(_MAX_TOKEN_LEN + 1, dtype=np.int64)
-_POW33[0] = 1
-for _i in range(1, _MAX_TOKEN_LEN + 1):
-    _POW33[_i] = (_POW33[_i - 1] * 33) % LONG_PRIME
+
+def _pow33_table(n: int) -> np.ndarray:
+    """33^i mod LONG_PRIME for i in [0, n]."""
+    pow33 = np.empty(n + 1, dtype=np.int64)
+    pow33[0] = 1
+    for i in range(1, n + 1):
+        pow33[i] = (pow33[i - 1] * 33) % LONG_PRIME
+    return pow33
+
+
+# Powers for tokens up to 4,096 bytes; djb2_batch grows the table (and
+# keeps it) when a longer token shows up.
+_POW33 = _pow33_table(4096)
 
 
 def affine_params(seed: int, depth: int) -> tuple[np.ndarray, np.ndarray]:
@@ -108,8 +118,9 @@ def djb2_batch(tokens) -> np.ndarray:
         return np.full(len(arr), DJB2_INIT % LONG_PRIME, dtype=np.int64)
     data = np.frombuffer(buffers[2], dtype=np.uint8, count=first + nbytes)[first:]
     lengths = np.diff(offsets)
-    if lengths.max(initial=0) > _MAX_TOKEN_LEN:
-        raise ValueError(f"token longer than {_MAX_TOKEN_LEN} bytes")
+    longest = int(lengths.max(initial=0))
+    if longest >= len(_POW33):
+        _grow_pow33(longest)
     # distance-from-end exponent for every byte position
     ends = np.repeat(offsets[1:], lengths)
     pos = np.arange(nbytes, dtype=np.int64)
@@ -123,10 +134,18 @@ def djb2_batch(tokens) -> np.ndarray:
         red_starts = starts[nonempty]
         seg = np.add.reduceat(terms, red_starts)
         # reduceat sums between consecutive start indices; trailing segment ok.
-        # Sum of terms: each term < LONG_PRIME (<2^33); max segment len 4096
-        # -> < 2^45, exact in int64.
+        # Sum of terms: each term < LONG_PRIME (~2^32), so a token of L bytes
+        # sums to < LONG_PRIME*L, exact in int64 for L <= _MAX_EXACT_LEN.
         out[nonempty] = (DJB2_INIT * _POW33[lengths[nonempty]] + seg) % LONG_PRIME
     return out
+
+
+def _grow_pow33(n: int) -> None:
+    """Extend the module's power table to cover tokens of ``n`` bytes."""
+    global _POW33
+    if n > _MAX_EXACT_LEN:
+        raise ValueError(f"token of {n} bytes overflows the int64 djb2 sum")
+    _POW33 = _pow33_table(n)
 
 
 def splitmix31(x: np.ndarray, a: int, b: int) -> np.ndarray:

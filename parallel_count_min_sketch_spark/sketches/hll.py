@@ -18,6 +18,7 @@ import struct
 
 import numpy as np
 
+from .fold import fold_blobs
 from .hashing import MERSENNE_PRIME, affine_params, djb2_batch
 
 _MAGIC = b"HLL1"
@@ -141,10 +142,4 @@ class HyperLogLog:
 
     @staticmethod
     def merge_blobs(blobs) -> "HyperLogLog":
-        out = None
-        for blob in blobs:
-            sk = HyperLogLog.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
+        return fold_blobs(blobs, HyperLogLog.from_bytes)

@@ -21,6 +21,8 @@ import struct
 
 import numpy as np
 
+from .fold import fold_blobs
+
 _MAGIC = b"KLL1"
 _C = 2.0 / 3.0  # capacity decay
 
@@ -161,10 +163,4 @@ class KLLSketch:
 
     @staticmethod
     def merge_blobs(blobs) -> "KLLSketch":
-        out = None
-        for blob in blobs:
-            sk = KLLSketch.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
+        return fold_blobs(blobs, KLLSketch.from_bytes)

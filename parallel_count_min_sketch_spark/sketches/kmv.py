@@ -48,6 +48,7 @@ import struct
 
 import numpy as np
 
+from .fold import fold_blobs
 from .hashing import MERSENNE_PRIME, affine_params, djb2_batch
 
 # second hash prime (2^31 - 19): must differ from MERSENNE_PRIME so the
@@ -190,10 +191,4 @@ class KMVSketch:
 
     @staticmethod
     def merge_blobs(blobs) -> "KMVSketch":
-        out = None
-        for blob in blobs:
-            sk = KMVSketch.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
+        return fold_blobs(blobs, KMVSketch.from_bytes)

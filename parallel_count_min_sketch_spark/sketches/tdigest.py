@@ -16,6 +16,8 @@ import struct
 
 import numpy as np
 
+from .fold import fold_blobs
+
 _MAGIC = b"TDG1"
 _BUFFER_FACTOR = 5
 
@@ -137,10 +139,4 @@ class TDigest:
 
     @staticmethod
     def merge_blobs(blobs) -> "TDigest":
-        out = None
-        for blob in blobs:
-            sk = TDigest.from_bytes(bytes(blob))
-            out = sk if out is None else out.merge(sk)
-        if out is None:
-            raise ValueError("no blobs to merge")
-        return out
+        return fold_blobs(blobs, TDigest.from_bytes)

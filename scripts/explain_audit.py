@@ -55,8 +55,8 @@ AUDITED = [
 def _rollup_build_df(spark, sf_dir):
     """The contract query's final DataFrame is a driver-local probe table,
     so audit the interesting stage directly: the pre_aggregate=True bucket
-    build (JVM partial/final (day,item) count agg below the grouped Arrow
-    sketch rails)."""
+    build (JVM partial/final (day,item) count agg, an exchange on the day,
+    then ONE Arrow stage that folds each whole day into its bucket row)."""
     from parallel_count_min_sketch_spark.operators.rollup import cms_time_buckets
     from parallel_count_min_sketch_spark.plans.cms_queries import ROLLUP_CFG, load
 
@@ -91,7 +91,7 @@ def _incremental_matches_df(spark, sf_dir):
 
 EXTRA = [
     ("cms_time_rollup (bucket build)", _rollup_build_df,
-     "distinct-first rollup build: expect partial+final HashAggregate on (day,item) feeding the grouped Arrow sketch stage — no per-occurrence rows cross the Python channel"),
+     "distinct-first rollup build: expect partial+final HashAggregate on (day,item), an Exchange on the day alone, then ONE MapInArrow stage that folds each whole day into its bucket row — no per-occurrence rows cross the Python channel, no FlatMapGroupsInPandas merge stage"),
     ("incremental_dedup (index probe join)", _incremental_matches_df,
      "nightly-batch dedup vs persisted LSH index: batch band rows broadcast into a map-only index scan (index FileScan streamed, never exchanged), oversized corpus buckets pre-excluded via a broadcast anti-join"),
 ]

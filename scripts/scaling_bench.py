@@ -295,7 +295,7 @@ criterion evidenced by two parallelism levels on the same input).
 | path | local[{args.n}] wall | local[{args.n * 4}] wall | local[{args.n}] docs/s | local[{args.n * 4}] docs/s | efficiency (N -> 4N) |
 |---|---|---|---|---|---|
 | JVM SQL (Catalyst partial/final agg) | {small['sql_sec']:.2f} s | {big['sql_sec']:.2f} s | {thr(small, 'sql_sec'):,.0f} | {thr(big, 'sql_sec'):,.0f} | **{eff_sql:.2f}** |
-| Arrow kernel (mapInArrow + treeReduce) | {small['arrow_sec']:.2f} s | {big['arrow_sec']:.2f} s | {thr(small, 'arrow_sec'):,.0f} | {thr(big, 'arrow_sec'):,.0f} | **{eff_arrow:.2f}** |
+| Arrow kernel (mapInArrow + driver fold) | {small['arrow_sec']:.2f} s | {big['arrow_sec']:.2f} s | {thr(small, 'arrow_sec'):,.0f} | {thr(big, 'arrow_sec'):,.0f} | **{eff_arrow:.2f}** |
 
 Token throughput (best path per level): {small['n_tokens'] / min(small['sql_sec'], small['arrow_sec']) / 1e6:.1f}M tokens/s at
 local[{args.n}], {big['n_tokens'] / min(big['sql_sec'], big['arrow_sec']) / 1e6:.1f}M tokens/s at local[{args.n * 4}].

@@ -1,4 +1,4 @@
-"""Spark aggregation layer: partial sketches + tree merge must equal a
+"""Spark aggregation layer: partial sketches + driver fold must equal a
 single-pass sequential build byte-for-byte, independent of partitioning —
 the distributed-correctness core of the whole library (the property
 MPI_Reduce relies on in the reference, src/mpi/mpiV2.c:163-175)."""
@@ -228,8 +228,62 @@ def test_weighted_cms_path_rejects_negative_weights(spark):
 def test_merge_partials_large_fanin(spark, items_df):
     df, items = items_df
     partials = cms_partials(df.repartition(32), "item", CFG)
-    sk = merge_partials(partials, CFG, depth=3)
+    sk = merge_partials(partials, CFG)
     assert np.array_equal(sk.table, expected_sketch(items).table)
+    with pytest.raises(ValueError):
+        merge_partials(partials.limit(0), CFG)
+
+
+def test_merge_sketch_partials_large_fanin(spark, items_df):
+    """The generic rail's driver fold: 32 HLL partials merge to exactly
+    the sequential kernel's registers; no partial at all is an error, and
+    so is a fan-in whose blobs would not fit the driver's result limit."""
+    from parallel_count_min_sketch_spark.operators.sketch_agg import (
+        PartialsExceedDriverLimit,
+        merge_sketch_partials,
+        sketch_partials,
+    )
+    from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
+
+    def mk():
+        from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
+
+        return HyperLogLog(10, 5)
+
+    df, items = items_df
+    partials = sketch_partials(df.repartition(32), "item", mk)
+    sk = merge_sketch_partials(partials, HyperLogLog.from_bytes)
+    exp = mk()
+    exp.update_batch(np.asarray(items, dtype=np.int64))
+    assert np.array_equal(sk.registers, exp.registers)
+    with pytest.raises(ValueError):
+        merge_sketch_partials(partials.limit(0), HyperLogLog.from_bytes)
+    # 32 partials x 64 MB pass the default 1 GB spark.driver.maxResultSize:
+    # refused by name before the partials are built
+    with pytest.raises(PartialsExceedDriverLimit, match="coalesce"):
+        merge_sketch_partials(partials, HyperLogLog.from_bytes,
+                              blob_bytes=64 << 20)
+
+
+def test_arrow_build_hashes_tokens_over_4kb(spark):
+    """A page holding a 5 KB token (a minified-JS run) must build through
+    the Arrow text path and equal the Catalyst cms_table_df matrix."""
+    from pyspark.sql import functions as F
+
+    from parallel_count_min_sketch_spark.operators.sql_build import cms_table_df
+
+    cfg = CMSConfig(epsilon=0.1, delta=0.1, seed=3)
+    long_tok = "".join(chr(97 + i % 26) for i in range(5000))
+    docs = [(f"var x {long_tok} x end",), ("plain page text x",)]
+    df = spark.createDataFrame(docs, "text STRING")
+    arrow_sk = build_cms_from_text(df.repartition(2), "text", cfg)
+    toks = df.select(F.explode(F.split("text", " ")).alias("tok")) \
+        .filter("tok != ''")
+    table = np.zeros((cfg.depth, cfg.width), dtype=np.int64)
+    for r in cms_table_df(toks, "tok", cfg, string_items=True).collect():
+        table[r["depth_row"], r["bucket"]] = r["counter"]
+    assert np.array_equal(arrow_sk.table, table)
+    assert arrow_sk.total == 9
 
 
 @pytest.mark.parametrize("name", [

@@ -173,6 +173,22 @@ def test_djb2_batch_matches_scalar():
         assert h == djb2_py(t)
 
 
+def test_djb2_batch_long_tokens_match_scalar():
+    """Tokens longer than the 4,096-byte power table built at import grow
+    the table and still equal the scalar reference: a 10 KB token, lengths
+    around 4,096 and 8,192, multi-byte UTF-8, and a sliced Arrow array
+    mixing long and short tokens."""
+    import pyarrow as pa
+
+    ten_kb = "".join(chr(97 + i % 26) for i in range(10 * 1024))
+    toks = ["ab", ten_kb, "", "x" * 4096, "y" * 4097, "z" * 8192,
+            "é" * 2049, "日本" * 1500, "tok1"]
+    assert djb2_batch([ten_kb]).tolist() == [djb2_py(ten_kb)]
+    assert djb2_batch(toks).tolist() == [djb2_py(t) for t in toks]
+    sliced = pa.array(["pad"] + toks)[1:]
+    assert djb2_batch(sliced).tolist() == [djb2_py(t) for t in toks]
+
+
 def test_string_updates():
     sk = CountMinSketch(0.1, 0.1, seed=5)
     sk.update_strings(["foo", "bar", "foo"])

@@ -279,7 +279,8 @@ def test_rollup_pre_aggregate_plan(spark):
     (ts, item) only, (b) collapse occurrences with a partial+final
     HashAggregate on (day, item) BELOW the Arrow stage — so the Python
     channel moves one weighted row per distinct pair — and (c) keep the
-    counting on the codegen path."""
+    counting on the codegen path, and (d) fold each day in that one
+    Arrow stage, with no pandas merge stage after it."""
     from parallel_count_min_sketch_spark.operators.rollup import cms_time_buckets
     from parallel_count_min_sketch_spark.plans.cms_queries import ROLLUP_CFG
 
@@ -299,6 +300,9 @@ def test_rollup_pre_aggregate_plan(spark):
     assert partial_pos > arrow_pos and final_agg_pos > arrow_pos, (
         "the (day,item) count agg must sit below the Arrow stage:\n" + final
     )
+    # each whole day folds once in the Arrow stage: no second Python
+    # stage merges per-partition day partials
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_interval_join_plan_is_bucket_equi_join(spark, sf_dir):

@@ -106,16 +106,19 @@ def test_generic_rollup_hll_union_equals_direct_build(spark, events):
 
 
 def test_pre_aggregate_rollup_build_is_bit_identical(spark, events):
-    """The distinct-first rollup build (groupBy(day, item) count, then
-    weighted grouped build) must produce byte-identical day sketches —
+    """The distinct-first rollup build (groupBy(day, item) count, then one
+    weighted fold per whole day) must produce byte-identical day sketches
+    with the same rows_seen and total at any input partitioning —
     weighted CMS updates are the same integer sums."""
-    lo, hi = "2024-01-02", "2024-01-25"
-    plain = cms_rollup_range(
-        cms_time_buckets(events, "ts", "user_id", CFG), lo, hi, CFG)
-    pre = cms_rollup_range(
-        cms_time_buckets(events, "ts", "user_id", CFG, pre_aggregate=True),
-        lo, hi, CFG)
-    assert plain.to_bytes() == pre.to_bytes()
+    def days(df, **kw):
+        return {r["bucket"]: (bytes(r["sketch"]), r["rows_seen"], r["total"])
+                for r in cms_time_buckets(df, "ts", "user_id", CFG,
+                                          **kw).collect()}
+
+    plain = days(events)
+    assert len(plain) > 0
+    for src in (events, events.repartition(13)):
+        assert days(src, pre_aggregate=True) == plain
 
 
 def test_kll_rollup_range_rank_accuracy(spark, events):
@@ -298,10 +301,13 @@ def test_generic_rollup_pre_aggregate_bit_identical_for_hll(spark, events):
     from parallel_count_min_sketch_spark.sketches.hll import HyperLogLog
 
     mk = partial(HyperLogLog, 12, 7)
-    plain = {r["bucket"]: bytes(r["sketch"]) for r in
-             sketch_time_buckets(events, "ts", "user_id", mk,
-                                 _hll_from_bytes).collect()}
-    pre = {r["bucket"]: bytes(r["sketch"]) for r in
-           sketch_time_buckets(events, "ts", "user_id", mk, _hll_from_bytes,
-                               pre_aggregate=True).collect()}
-    assert plain == pre and len(plain) > 0
+
+    def days(df, **kw):
+        return {r["bucket"]: (bytes(r["sketch"]), r["rows_seen"]) for r in
+                sketch_time_buckets(df, "ts", "user_id", mk, _hll_from_bytes,
+                                    **kw).collect()}
+
+    plain = days(events)
+    assert len(plain) > 0
+    for src in (events, events.repartition(13)):
+        assert days(src, pre_aggregate=True) == plain
